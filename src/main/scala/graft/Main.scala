@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 import graft.config.DedupeConfig
 import graft.model.Settings
@@ -32,16 +31,8 @@ object Main {
     val output = opts.get("output").orElse(cfg.output)
       .getOrElse(sys.error("no --output flag and no `output` config key"))
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", graft.functions.GraftExtensions.CONF)
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_MASTER: a cluster address in place of local[cpus].
+    val spark = GraftSession(master = sys.env.get("SPARK_GRAFT_MASTER"))
 
     val entries = spark.read.parquet(input)
     val result = DedupePipeline.run(entries, cfg)

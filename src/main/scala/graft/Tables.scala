@@ -8,13 +8,11 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * scale-factor directory.
   */
 object Tables {
-  val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
-    "part", "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = spark.read.parquet(s"$dir/$name.parquet")
     // events.ts is TIMESTAMP(NANOS) parquet, which Spark only reads via
-    // spark.sql.legacy.parquet.nanosAsLong (set in Verify/Bench); convert
+    // spark.sql.legacy.parquet.nanosAsLong (set by GraftSession); convert
     // the long nanos back to a micros timestamp. DuckDB truncates ns→µs
     // the same way, so oracle comparisons stay exact.
     val nanoFixed =
@@ -54,9 +52,6 @@ object Tables {
       else d.withColumn(f.name, col(f.name).cast(target))
     }
   }
-
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 
   /** CSV bulk ingest (S3 — the Spark stand-in for the reference's COPY
     * surface, pgdedupe/run.py:234-245): header CSV with an EXPLICIT

@@ -4,25 +4,23 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-/** Distributed connected components over an edge DataFrame (ref: SURVEY.md
-  * D9 — the reference walks the edge list with a recursive DFS on the
-  * driver, pgdedupe/exact_matches.py:9-50; that caps at driver memory, so
-  * here it's an iterative min-label-propagation fixpoint, checkpointed per
-  * round to keep lineage flat (SURVEY.md §4).
-  *
-  * Converges in O(max component diameter) rounds; dedupe components are
-  * person-sized so this is a handful of rounds even at 100 TB. Each round
-  * is one shuffle join + one aggregation.
+/** Connected components over an edge DataFrame (ref: SURVEY.md D9 — the
+  * reference walks the edge list with a recursive DFS on the driver,
+  * pgdedupe/exact_matches.py:9-50, which caps at driver memory). Every
+  * caller goes through `auto`: a driver union-find for graphs under an
+  * edge cap, else `runStar`, the distributed large-star/small-star
+  * fixpoint, checkpointed per round to keep lineage flat (SURVEY.md §4).
+  * Both label each vertex with the minimum id of its component.
   */
 object ConnectedComponents {
 
-  /** Size-adaptive kernel selection. The distributed kernels pay
+  /** Size-adaptive kernel selection. The distributed kernel pays
     * O(log² n) rounds of shuffle + eager localCheckpoint as FIXED cost
     * regardless of graph size — ≈10 s on a 500-vertex graph at 32
     * shuffle partitions — so a graph that fits comfortably on the driver
     * (≤ `smallEdgeCap` edges) is solved with a local min-union
     * union-find instead: one collect, zero rounds, identical labels
-    * (component = min reachable id, same as `run` and `runStar`).
+    * (component = min reachable id, same as `runStar`).
     * Driver heap at the default 1M-edge cap: the raw data is ~16 MB,
     * but the JVM cost is the collected tuple array plus boxed
     * TreeSet/HashMap nodes for up to 2M longs — budget a few hundred
@@ -137,84 +135,19 @@ object ConnectedComponents {
     }
   }
 
-  /** edges: two long columns (src, dst), undirected. Returns
-    * `(id, component)` where component = min reachable id.
-    */
-  def run(
-      edges: DataFrame,
-      srcCol: String = "l_id",
-      dstCol: String = "r_id",
-      maxIter: Int = 50): DataFrame = {
-    val sym = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .union(edges.select(col(dstCol).cast("long").as("src"),
-        col(srcCol).cast("long").as("dst")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // Vertex set (SO1, ref exact_matches.py:29: concat of both id columns).
-    var labels = sym.select(col("src").as("id")).distinct()
-      .withColumn("component", col("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      // Min neighbor label per vertex, with the convergence flag computed
-      // inside the same label-update job: the eager localCheckpoint is the
-      // iteration's ONE distributed action; the change probe afterwards is
-      // a limit-1 scan of the already-materialized partitions (no join, no
-      // shuffle, no lineage recompute).
-      val neighborMin = sym
-        .join(labels.select("id", "component").withColumnRenamed("id", "src"),
-          "src")
-        .groupBy(col("dst").as("id"))
-        .agg(min("component").as("nbr_component"))
-      val next = labels.join(neighborMin, Seq("id"), "left_outer")
-        .select(col("id"),
-          least(col("component"), coalesce(col("nbr_component"),
-            col("component"))).as("component"),
-          (coalesce(col("nbr_component"), col("component")) <
-            col("component")).as("chg"))
-        .localCheckpoint(true)
-      val changed = next.where(col("chg")).limit(1).count()
-      labels.unpersist(false)
-      labels = next
-      converged = changed == 0
-      iter += 1
-    }
-    sym.unpersist(false)
-    // Round count is the O(diameter) cost driver and varies with AQE
-    // partitioning — log it so bench variance can be attributed. A
-    // non-converged exit would return PARTIAL labels that look complete
-    // — the one failure mode this engine never allows silently — so it
-    // throws instead of warning; prefer runStar for high-diameter
-    // graphs (O(log² n) rounds regardless of diameter).
-    if (!converged) {
-      labels.unpersist(false)
-      throw new IllegalStateException(
-        s"min-label CC did not converge within maxIter=$maxIter rounds " +
-          "— labels would be partial; raise maxIter or use runStar for " +
-          "long-chain graphs")
-    }
-    org.slf4j.LoggerFactory.getLogger(getClass).info(
-      s"connected components converged in $iter rounds")
-    labels.select("id", "component")
-  }
-
   /** Alternating large-star/small-star connected components (Kiveris et
     * al., "Connected Components in MapReduce and Beyond"): converges in
     * O(log² n) rounds regardless of component DIAMETER, where min-label
-    * propagation (`run`) needs O(diameter) rounds. Person-dedup
-    * components are shallow, so `run` wins there (benchmarked at sf0.1 —
-    * see the scaladoc numbers in the spec); this is the robust choice
-    * when the edge graph can contain long chains (e.g. transitive
-    * near-dup links over crawl snapshots).
+    * propagation needs O(diameter) rounds, so long chains (e.g.
+    * transitive near-dup links over crawl snapshots) stay cheap. `auto`
+    * uses it for graphs over its edge cap.
     *
     * Each round: large-star hangs every higher-id neighbor of u onto
     * u's minimum neighbor; small-star re-points u and its lower-id
     * neighbors at their minimum. Edges stay oriented (high, low); the
     * fixpoint is a forest of depth-1 stars whose roots are component
-    * minima. Same per-round localCheckpoint discipline as `run`.
+    * minima. Each round's output is eagerly localCheckpointed, so the
+    * lineage stays one round deep.
     */
   def runStar(
       edges: DataFrame,
@@ -284,9 +217,9 @@ object ConnectedComponents {
       e = small
       iter += 1
     }
-    // Same fail-loud contract as `run`: a non-converged star forest can
-    // still contain depth-2 chains, i.e. labels that are not component
-    // minima — never return them behind a log line.
+    // Fail loud: a non-converged star forest can still contain depth-2
+    // chains, i.e. labels that are not component minima — never return
+    // them behind a log line.
     if (!converged)
       throw new IllegalStateException(
         s"star CC did not converge within maxIter=$maxIter rounds — " +

@@ -53,8 +53,8 @@ object ExactMatches {
   def merge(df: DataFrame, cols: Seq[String], clusterCol: String,
       label: String = "exact-merge"): DataFrame = {
     val edges = mergeEdges(df, cols, clusterCol)
-    // runStar: faster on the real workload and diameter-robust (CcBench).
-    // `label` keys the PhaseLog note: multi-set merge runs (the pipeline
+    // auto: driver union-find under its edge cap, else the
+    // diameter-robust runStar. `label` keys the PhaseLog note: multi-set merge runs (the pipeline
     // folds one pass per mergeExact field set) must not overwrite each
     // other's kernel-choice notes.
     val comps = ConnectedComponents.auto(edges, "id1", "id2",

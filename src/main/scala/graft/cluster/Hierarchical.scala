@@ -343,10 +343,9 @@ object Hierarchical {
     import spark.implicits._
     val above = scoredPairs.where(col("score") >= threshold)
     // auto: driver union-find below the edge cap (zero shuffle rounds),
-    // else runStar — 1.8× faster than min-label on the sf0.1 person edge
-    // set (11.9 s vs 21.9 s, identical labels — CcBench) with O(log² n)
-    // rounds regardless of component diameter. The cap is caller-tunable
-    // (DedupeConfig.ccEdgeCap for the pipeline).
+    // else runStar, with O(log² n) rounds regardless of component
+    // diameter. The cap is caller-tunable (DedupeConfig.ccEdgeCap for
+    // the pipeline).
     val comps = ConnectedComponents.auto(above, smallEdgeCap = ccEdgeCap,
       label = "hac-cluster")
     val withComp = above

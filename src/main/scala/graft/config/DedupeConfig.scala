@@ -54,8 +54,6 @@ final case class DedupeConfig(
 
   /** Dedup columns, ref `config['columns']` (run.py:56-58). */
   def columns: Seq[String] = fields.map(_.field).distinct
-  /** Columns + surrogate key, ref `config['all_columns']`. */
-  def allColumns: Seq[String] = columns :+ "_unique_id"
 }
 
 object DedupeConfig {

@@ -21,8 +21,6 @@ import org.apache.spark.sql.functions._
   */
 object Multimodal {
 
-  final case class MediaMeta(
-      id: Long, n_bytes: Int, header_hex: String, kind: String)
   final case class MediaFeature(id: Long, feature: Array[Float])
   final case class MediaInfo(
       id: Long, kind: String, width: Int, height: Int,

@@ -26,18 +26,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** Cores of the shared suite session: fixed, not the host's, so
+    * partition-dependent assertions see the same layout everywhere.
+    */
+  val cpus = 4
+
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .config("spark.sql.extensions", graft.functions.GraftExtensions.CONF)
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is TIMESTAMP(NANOS) parquet — same flag Verify/Bench
-      // set; Tables.load converts the long nanos back to a timestamp.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession(cpus)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

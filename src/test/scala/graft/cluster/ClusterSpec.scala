@@ -1,80 +1,81 @@
 package graft.cluster
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
 class ClusterSpec extends SparkSpec {
 
+  private def labels(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** Labels from both kernels `auto` can pick: its driver union-find
+    * (every graph here is under the default edge cap) and runStar. */
+  private def bothKernels(edges: DataFrame): Seq[(String, Map[Long, Long])] =
+    Seq("driver union-find" -> labels(ConnectedComponents.auto(edges)),
+      "runStar" -> labels(ConnectedComponents.runStar(edges)))
+
   test("connected components labels chains and keeps islands apart") {
     import spark.implicits._
     // 1-2-3 chained, 10-11, 20 alone (20 never appears in edges).
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("l_id", "r_id")
-    val comps = ConnectedComponents.run(edges).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(comps(1L) == 1L && comps(2L) == 1L && comps(3L) == 1L)
-    assert(comps(10L) == 10L && comps(11L) == 10L)
-    assert(!comps.contains(20L))
+    bothKernels(edges).foreach { case (kernel, comps) =>
+      assert(comps == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L,
+        11L -> 10L), s"$kernel: $comps")
+    }
   }
 
   test("connected components converges on a long path") {
     import spark.implicits._
     val edges = (1L until 40L).map(i => (i, i + 1)).toDF("l_id", "r_id")
-    val comps = ConnectedComponents.run(edges).collect()
-    assert(comps.length == 40)
-    assert(comps.forall(_.getLong(1) == 1L))
+    bothKernels(edges).foreach { case (kernel, comps) =>
+      assert(comps.size == 40, s"$kernel: $comps")
+      assert(comps.values.forall(_ == 1L), s"$kernel: $comps")
+    }
   }
 
   test("CC throws on non-convergence instead of returning partial labels") {
     import spark.implicits._
-    // A 40-chain needs ~39 min-label rounds; maxIter=1 cannot converge.
+    // A 40-chain needs several star rounds; maxIter=1 cannot converge.
     // Partial labels that look complete are the one silent failure this
-    // engine forbids — both kernels must throw, not warn.
+    // engine forbids — the distributed kernel must throw, not warn.
     val edges = (1L until 40L).map(i => (i, i + 1)).toDF("l_id", "r_id")
-    val e1 = intercept[IllegalStateException] {
-      ConnectedComponents.run(edges, maxIter = 1).collect()
-    }
-    assert(e1.getMessage.contains("did not converge"))
-    val e2 = intercept[IllegalStateException] {
+    val e = intercept[IllegalStateException] {
       ConnectedComponents.runStar(edges, maxIter = 1).collect()
     }
-    assert(e2.getMessage.contains("did not converge"))
-  }
-
-  test("star CC agrees with min-label propagation") {
-    import spark.implicits._
-    // Mixed shapes: a chain, a triangle sharing a node with the chain, a
-    // separate pair, and an island (absent from edges → absent from both).
-    val edges = Seq(
-      (1L, 2L), (2L, 3L), (3L, 4L), (4L, 7L), (7L, 1L),
-      (10L, 11L), (30L, 31L), (31L, 32L)).toDF("l_id", "r_id")
-    def toMap(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val a = toMap(ConnectedComponents.run(edges))
-    val b = toMap(ConnectedComponents.runStar(edges))
-    assert(a == b, s"min-label $a vs star $b")
+    assert(e.getMessage.contains("did not converge"))
   }
 
   test("auto CC: driver union-find below the cap, runStar above — " +
       "identical labels") {
     import spark.implicits._
-    val edges = Seq(
+    val mixed = Seq(
       (9L, 2L), (2L, 3L), (3L, 9L), (4L, 7L), (7L, 2L), // one component
       (10L, 11L), (11L, 10L), // duplicate + reversed edges
       (30L, 31L), (31L, 32L), (40L, 40L) // chain + self-loop island
     ).toDF("l_id", "r_id")
-    def toMap(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val star = toMap(ConnectedComponents.runStar(edges))
-    val driver = toMap(ConnectedComponents.auto(edges)) // under cap
-    val dist = toMap(ConnectedComponents.auto(edges, smallEdgeCap = 2L))
+    // A chain closed into a cycle, a separate pair, and a short chain.
+    val chainCycle = Seq(
+      (1L, 2L), (2L, 3L), (3L, 4L), (4L, 7L), (7L, 1L),
+      (10L, 11L), (30L, 31L), (31L, 32L)).toDF("l_id", "r_id")
+    val results = Seq(mixed, chainCycle).map { edges =>
+      val star = labels(ConnectedComponents.runStar(edges))
+      val driver = labels(ConnectedComponents.auto(edges)) // under cap
+      val dist = labels(ConnectedComponents.auto(edges, smallEdgeCap = 2L))
+      assert(dist == star, s"above-cap auto $dist vs runStar $star")
+      assert(driver == star, s"driver $driver vs star $star")
+      driver
+    }
+    val Seq(driver, cycle) = results
     assert(driver.get(9L).contains(2L) && driver.get(7L).contains(2L))
-    assert(dist == star, s"above-cap auto $dist vs runStar $star")
     // Pure self-loop islands (40) are singleton components on BOTH
     // kernels — auto's contract is identical labels across the cap, so
     // the vertex sets (not just shared ids) must agree exactly.
-    assert(star.get(40L).contains(40L), s"runStar dropped 40: $star")
-    assert(driver == star, s"driver $driver vs star $star")
+    assert(driver.get(40L).contains(40L), s"self-loop island: $driver")
+    assert(cycle == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 7L -> 1L,
+      10L -> 10L, 11L -> 10L, 30L -> 30L, 31L -> 30L, 32L -> 30L),
+      s"got $cycle")
   }
 
   test("star CC collapses a long path in few rounds") {
